@@ -151,9 +151,9 @@ def _whole_grid(kernel, dem, halo, extra):
     return kernel(padded, halo, ctx)
 
 
-@pytest.mark.parametrize("name,kname,halo,extra,_timed",
+@pytest.mark.parametrize("name,kname,halo,extra",
                          [s for s in workloads.STENCILS if s[1]])
-def test_stencil_checks(dem, name, kname, halo, extra, _timed):
+def test_stencil_checks(dem, name, kname, halo, extra):
     params = workloads.stencil_params(dem) if name == "dev_from_mean" else (extra or {})
     out = _whole_grid(getattr(kernels, kname), dem, halo, params)
     blocks = checks.stencil_blocks(np.random.default_rng(0), 96, 96, 48)

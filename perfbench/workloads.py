@@ -203,13 +203,12 @@ def corpus_checks(ctx: Ctx, g: Group) -> dict[str, Callable[[], str | None]]:
 
 # --- terrain stencils ------------------------------------------------------
 
-STENCILS = (  # name, kernel attr (None = identity probe), halo, ctx_extra, timed
-    ("stencil_noop", None, 1, None, True),
-    ("slope", "slope_kernel", 1, None, True),
-    ("hillshade", "hillshade_kernel", 1, None, True),
-    ("mean_filter", "mean_filter_kernel", MEAN_R,
-     {"rx": MEAN_R, "ry": MEAN_R}, True),
-    ("dev_from_mean", "deviation_from_mean_kernel", DEV_R, {"r": DEV_R}, True),
+STENCILS = (  # name, kernel attr (None = identity probe), halo, ctx_extra
+    ("stencil_noop", None, 1, None),
+    ("slope", "slope_kernel", 1, None),
+    ("hillshade", "hillshade_kernel", 1, None),
+    ("mean_filter", "mean_filter_kernel", MEAN_R, {"rx": MEAN_R, "ry": MEAN_R}),
+    ("dev_from_mean", "deviation_from_mean_kernel", DEV_R, {"r": DEV_R}),
 )
 
 
@@ -238,14 +237,13 @@ def stencil_group(ctx: Ctx) -> Group:
               digests={"stencil_dem": dig})
     dev = stencil_params(dem)
 
-    def op(name, kname, halo, extra, timed):
+    def op(name, kname, halo, extra):
         kernel = noop_kernel if kname is None else getattr(kernels, kname)
         extra = dev if name == "dev_from_mean" else extra
         return Op(stencil_op_name(name, kname),
                   lambda sink: sink(run_stencil(
                       tiles, meta, kernel, halo=halo, tile=STENCIL_TILE,
-                      ctx_extra=extra, output="tiles", copartitioned=True)),
-                  timed)
+                      ctx_extra=extra, output="tiles", copartitioned=True)))
 
     g.ops = [op(*s) for s in STENCILS]
     g.dem, g.meta = dem, meta
@@ -276,7 +274,7 @@ def stencil_checks(ctx: Ctx, g: Group) -> dict[str, Callable[[], str | None]]:
         return checks.check_stencil(name, g.dem, grid, params, blocks, halo)
 
     return {stencil_op_name(n, k): (lambda s=(n, k, h, e): one(*s))
-            for n, k, h, e, _ in STENCILS}
+            for n, k, h, e in STENCILS}
 
 
 # --- hydrology fixpoints ------------------------------------------------------
