@@ -64,7 +64,9 @@ def tfidf_topk(docs: DataFrame, k: int = 5) -> DataFrame:
     # exchange subtrees stop being canonically equal, and runtime
     # exchange reuse cannot fire — with it the executed adaptive plan
     # contains a ReusedExchange and the corpus-scale explode+shuffle
-    # runs exactly once for both consumers.
+    # runs exactly once for both consumers. Validated on Spark 4.1.2:
+    # the trick leans on optimizer pruning and exchange canonicalization,
+    # so re-check test_tfidf_reuses_token_stream_exchange on upgrades.
     df_ = (tf.where(F.col("tf") >= 1)
            .groupBy("token").agg(F.count("*").alias("df")))
     scored = (tf.join(df_, "token")

@@ -15,9 +15,9 @@ hash-partitions — the classic shuffle-light near-dup pattern at scale
 
 from __future__ import annotations
 
-from go_spatial_spark.session import ensure_parallelism
+from go_spatial_spark.session import (cache_frame, ensure_parallelism,
+                                      release_cached)
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.storagelevel import StorageLevel
 
 N_HASHES = 8
 N_BANDS = 4  # 2 hashes per band
@@ -178,29 +178,6 @@ def simhash_oracle_sql(docs_tbl: str = "documents", bits: int = 60) -> str:
     """
 
 
-# Bounded cache lifecycle (same contract as similarity._ivf_assign):
-# at most ONE call's persisted intermediate (the gram-partitioned g2
-# frame) lives at a time. g2 is the multi-TB exploded gram table at
-# production scale — without eviction a long session issuing many
-# ngram queries pins every call's copy in MEMORY_AND_DISK forever.
-# Eviction also keeps plan-cache substitution deterministic: stale
-# entries from a prior call otherwise get substituted into SOME
-# branches of the next call's plan (Spark's cache lookup is
-# plan-structural), splitting the shared gram exchange into several.
-_ngram_persisted: list[DataFrame] = []
-
-
-def release_dedup_caches() -> None:
-    """Unpersist the previous ngram_jaccard_top1 call's intermediates —
-    call after a query's results are materialized to free executor
-    storage immediately instead of waiting for the next call."""
-    while _ngram_persisted:
-        try:
-            _ngram_persisted.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
 def ngram_jaccard_top1(docs: DataFrame, n_gram: int = NGRAM,
                        df_cap: int = 1000) -> DataFrame:
     """For each doc: its max-Jaccard neighbor over word-n-gram sets
@@ -215,7 +192,9 @@ def ngram_jaccard_top1(docs: DataFrame, n_gram: int = NGRAM,
     intersections (Jaccard over the capped vocabulary), mirrored
     exactly in the oracle."""
     docs = ensure_parallelism(docs)
-    release_dedup_caches()
+    # g2 is the multi-TB exploded gram table at production scale:
+    # only the latest call's copy stays cached
+    release_cached(docs.sparkSession, "ngram_jaccard_top1")
     # ONE persisted gram-partitioned frame carries everything the
     # self-join needs: the distinct (doc_id, gram) rows with the
     # per-doc capped-vocabulary set size sz attached (guide §2.3
@@ -235,20 +214,13 @@ def ngram_jaccard_top1(docs: DataFrame, n_gram: int = NGRAM,
           .where(F.col("df") <= df_cap)
           .withColumn("sz", F.count("*").over(Window.partitionBy("doc_id")))
           .select("doc_id", "gram", "sz")
-          .repartition("gram")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    _ngram_persisted.append(g2)
-    # Eager materialization BARRIER (same rationale as
-    # similarity._ann_index): (1) the self-join's two sides otherwise
-    # race to populate the cache from concurrent map stages, each
-    # recomputing uncached blocks; (2) until the cached
-    # AdaptiveSparkPlan is finalized its output partitioning reads as
-    # unknown, so the join planner inserts TWO ENSURE_REQUIREMENTS
-    # gram exchanges that re-shuffle the whole gram table — with the
-    # barrier the ShuffledHashJoin reuses the cached hash(gram)
-    # clustering and the join stage has zero exchanges (verified in
-    # the executed plan).
-    g2.count()
+          .repartition("gram"))
+    # cache_frame's barrier finalizes the cached AdaptiveSparkPlan, so
+    # the self-join sees its hash(gram) partitioning: the
+    # ShuffledHashJoin has zero exchanges (verified in the executed
+    # plan) instead of TWO ENSURE_REQUIREMENTS gram exchanges that
+    # re-shuffle the whole gram table.
+    g2 = cache_frame(g2, "ngram_jaccard_top1")
     l = g2.select(F.col("doc_id").alias("a"), "gram",
                   F.col("sz").alias("sa"))
     r = g2.select(F.col("doc_id").alias("b"), "gram",

@@ -24,10 +24,10 @@ import math
 
 import numpy as np
 
-from go_spatial_spark.session import ensure_parallelism
+from go_spatial_spark.session import (cache_frame, ensure_parallelism,
+                                      release_cached)
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
-from pyspark.storagelevel import StorageLevel
 
 # (lon, lat) integer vertices; ring closes last->first. Mix of convex,
 # concave, triangle, sliver, nested box pair (FIXTURES.md §5).
@@ -150,21 +150,6 @@ def pip_oracle_sql(points_sql: str, id_col: str = "doc_id") -> str:
 # kNN via cell-ring expansion
 # ---------------------------------------------------------------------------
 
-# Bounded cache lifecycle (same contract as dedup._ngram_persisted):
-# at most one knn_self call's per-stage resolved top-k frames (<= k
-# rows per resolved query each) are persisted at a time.
-_knn_persisted: list[DataFrame] = []
-
-
-def release_knn_caches() -> None:
-    """Unpersist the previous knn_self call's per-stage caches."""
-    while _knn_persisted:
-        try:
-            _knn_persisted.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
 def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
              id_col: str = "doc_id",
              radii: tuple[int, ...] = (1,),
@@ -209,7 +194,9 @@ def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
     next stage's remainder anti-join via Spark's exchange reuse.
     """
     points = ensure_parallelism(points)
-    release_knn_caches()
+    # at most one call's per-stage frames (<= k rows per resolved
+    # query each) stay cached: the previous call's are released here
+    release_cached(points.sparkSession, "knn_self")
     g = points.select(
         F.col(id_col).alias("qid"), F.col("lon").alias("qx"),
         F.col("lat").alias("qy"))
@@ -339,9 +326,7 @@ def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
             # windows/filters above the shuffle, and the chained plans
             # grow multiplicatively with the stage count). The cached
             # frame is bounded: <= k rows per RESOLVED query.
-            stage = stage.persist(StorageLevel.MEMORY_AND_DISK)
-            _knn_persisted.append(stage)
-            stage.count()
+            stage = cache_frame(stage, "knn_self")
         out = stage.select(*cols) if out is None \
             else out.unionByName(stage.select(*cols))
         if not last:

@@ -8,8 +8,11 @@ shuffle partitions sized to parallelism).
 from __future__ import annotations
 
 import os
+import threading
+from typing import Callable, NamedTuple
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 
 def get_spark(app: str = "go_spatial_spark", cpus: int | None = None,
@@ -202,3 +205,107 @@ def ensure_parallelism(df, min_parts: int | None = None):
     if parts < want:
         return df.repartition(want)
     return df
+
+
+# ---------------------------------------------------------------------------
+# Operator cache lifecycle
+# ---------------------------------------------------------------------------
+
+class _Slot(NamedTuple):
+    key: object                 # memo key; None outside the memo form
+    source: DataFrame | None    # input the memoized frame was built from
+    frames: tuple[DataFrame, ...]
+
+
+# (applicationId, operator) -> _Slot. A slot is only ever replaced
+# whole under the lock, so a reader always sees a key beside the frame
+# built for it. The lock is never held across a Spark job or a
+# blocking unpersist.
+_slots: dict[tuple[str, str], _Slot] = {}
+_slots_lock = threading.Lock()
+
+
+def _slot_id(spark: SparkSession, op: str) -> tuple[str, str]:
+    return (spark.sparkContext.applicationId, op)
+
+
+def cache_frame(df: DataFrame, op: str, key: object = None,
+                source: DataFrame | None = None) -> DataFrame:
+    """Persist ``df`` at MEMORY_AND_DISK behind an eager ``count()``
+    barrier and file it in ``op``'s slot for this session.
+
+    The barrier populates every block with full parallelism before any
+    consumer launches: the consumers of an operator's cache are
+    independent shuffle-map stages that Spark submits concurrently, and
+    left lazy each races the population and recomputes uncached blocks
+    (measured 5x build executor-run time at 4 executors, BENCH/NOTES.md
+    round-5 profile). It also finalizes the cached AQE plan, so joins
+    over the cache see its partitioning. The frame is filed only after
+    the barrier succeeds; if it fails the frame is unpersisted and the
+    error re-raised, so a retry never meets a half-materialized cache.
+    """
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        df.count()
+    except Exception:
+        try:
+            df.unpersist(blocking=False)
+        except Exception:
+            pass
+        raise
+    sid = _slot_id(df.sparkSession, op)
+    with _slots_lock:
+        held = _slots.get(sid)
+        _slots[sid] = _Slot(key, source,
+                            (held.frames if held else ()) + (df,))
+    return df
+
+
+def release_cached(spark: SparkSession, *ops: str) -> None:
+    """Unpersist every frame filed in ``ops``' slots for this session.
+
+    Operators call this at the start of each call (the memo form on a
+    miss), so at most one call's frames per operator stay cached — a
+    long session would otherwise pin every call's copy forever, and
+    stale entries would get substituted into some branches of the next
+    call's plan (Spark's cache lookup is plan-structural). BLOCKING: a
+    lazy unpersist leaves the stale cache competing with the new build
+    for executor storage (measured 2x degradation over repeated ANN
+    calls). A frame released while a lazy result still reads it is
+    recomputed from its lineage, so release never changes a result."""
+    sids = [_slot_id(spark, op) for op in ops]
+    with _slots_lock:
+        held = [_slots.pop(sid, None) for sid in sids]
+    for slot in filter(None, held):
+        # newest first: a later frame may read an earlier one, and
+        # uncaching the earlier one first makes Spark re-plan the later
+        for df in reversed(slot.frames):
+            try:
+                df.unpersist(blocking=True)
+            except Exception:
+                pass
+
+
+def memo_frame(source: DataFrame, op: str, key: object,
+               build: Callable[[], DataFrame]) -> DataFrame:
+    """``op``'s cached frame for ``source``: the slot's frame when it
+    was filed under an equal ``key`` AND from an input with the same
+    semantics as ``source``, else the slot is released and ``build()``'s
+    frame is cached in its place.
+
+    ``key`` is a cheap pre-filter (a 32-bit plan hash plus parameters);
+    ``sameSemantics`` confirms a hit, so two different inputs that
+    collide on the hash never share a frame. Any failure of that API
+    counts as a miss — rebuilding is always safe."""
+    spark = source.sparkSession
+    sid = _slot_id(spark, op)
+    with _slots_lock:
+        slot = _slots.get(sid)
+    if slot is not None and slot.key == key:
+        try:
+            if source.sameSemantics(slot.source):
+                return slot.frames[-1]
+        except Exception:
+            pass
+    release_cached(spark, op)
+    return cache_frame(build(), op, key, source)

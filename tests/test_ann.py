@@ -3,6 +3,7 @@ corpus collect), exact-refine precision vs the brute-force baselines,
 and the n-gram document-frequency cap on skewed corpora."""
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from go_spatial_spark.operators import dedup, similarity
@@ -132,7 +133,7 @@ def test_ann_index_memoized_and_invalidated(spark, sf001):
         assert idx3 is not idx2
         # release clears the slot; next call rebuilds
         similarity.release_ann_caches()
-        assert similarity._ann_index_cached is None
+        assert idx3.storageLevel == StorageLevel.NONE
         idx4 = similarity._ann_index(emb, 16, 2, 32, 16, 64)
         assert idx4 is not idx3
     finally:

@@ -302,4 +302,9 @@ def test_tfidf_reuses_token_stream_exchange(spark, sf001):
     out.collect()
     executed = out._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in executed
-    assert "ReusedExchange" in executed, executed
+    # the reused exchange must be the token stream's (doc_id, token)
+    # shuffle itself, not some other exchange that happens to repeat
+    import re
+    assert re.search(r"ReusedExchange \[[^\]]*\], Exchange "
+                     r"hashpartitioning\(doc_id#\d+L?, token#\d+, \d+\)",
+                     executed), executed
