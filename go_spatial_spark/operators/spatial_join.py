@@ -1,26 +1,30 @@
 """Spatial joins: point-in-polygon, kNN, raster<->vector conversion.
 
-The reference's latent spatial-index primitive is the k-d tree range
-search (/root/reference/structures/kdtree.go:77-105, unused by tools);
-here the same capability is Spark-native:
-
 - PIP  = broadcast polygon set + bbox/cell-prefix prune (Catalyst pushes
   the range predicates to the scan) + exact ray-casting refine inside a
   vectorized pandas UDF.
-- kNN  = cell-ring expansion: coarse-grid self-join on the 3x3 ring
-  (bounded candidates per query), with a guarantee test
-  (kth-distance <= ring radius) and an exact brute-force fallback for
-  the unresolved remainder (sparse regions; tiny at scale).
+- kNN  = density-adaptive tiles with halo replication, the Spark-native
+  form of the reference's k-d tree range search (structures/kdtree.go).
+  One sampling job sizes k-d tiles on the driver; one shuffle sends
+  each point to its home tile and to every tile whose halo-grown
+  rectangle holds it (the edge-strip halo idea of grid.py's raster
+  tiles); an exact NumPy kNN per tile answers every query whose kth
+  neighbour is provably closer than anything outside that rectangle.
+  The rest, usually none, go to a cell-ring hash join whose ring is
+  as wide as the query's local kth distance.
 
 At 100 TB the PIP prune is what matters: the refine UDF sees only
-bbox-candidate rows. The kNN ring join shuffles on the coarse cell key,
-which the geocoder's hotspot skew stresses — AQE skew-join plus the
-bounded 3x3 candidate set keep partitions sane.
+bbox-candidate rows. The kNN tiles split wherever the sample is dense,
+so the geocoder's hotspot skew becomes many small tiles rather than
+one hot shuffle key, and a tile group holds about KNN_TILE_CAP home
+points plus at most KNN_TILE_CAP replicas per side (coincident points
+excepted).
 """
 
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import numpy as np
 
@@ -147,193 +151,404 @@ def pip_oracle_sql(points_sql: str, id_col: str = "doc_id") -> str:
 
 
 # ---------------------------------------------------------------------------
-# kNN via cell-ring expansion
+# kNN via density-adaptive tiles with halo replication
 # ---------------------------------------------------------------------------
 
-def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
-             id_col: str = "doc_id",
-             radii: tuple[int, ...] = (1,),
-             fine_fractions: tuple[float, ...] = (360.0,)) -> DataFrame:
-    """Exact self-kNN (id, neighbor_id, rank), rank 1..k by (dist2, id).
+KNN_SAMPLE_CAP = 1000   # sampled rows per input partition
+KNN_TILE_CAP = 1024     # estimated home points per tile, and replicas per side
+_MAX_DEPTH = 40         # k-d recursion bound
+_MARGIN = 1e-9          # relative float slack of the resolution test
+_BLOCK = 1 << 20        # distance-matrix elements per query block
 
-    Escalating cell-ring equi-joins — NEVER a nested loop against the
-    full point table (the round-3 verdict's O(U x N) hazard: on a
-    uniformly-sparse corpus the old broadcast brute-force remainder
-    was the whole query set):
+_SAMPLE_SCHEMA = ("n long, x0 double, x1 double, y0 double, y1 double, "
+                  "xs array<double>, ys array<double>")
 
-    * MULTI-RESOLUTION pre-stages (round-6, guide §2.5 skew): one
-      3x3-ring pass per ``cell_size / f`` for each f in
-      ``fine_fractions``, finest first. The per-stage guarantee test
-      (k candidates and kth distance < 1*cs_stage — any point outside
-      a stage's ring is >= radius*cs_stage away, whatever cs_stage
-      is) keeps every stage exact, so fine stages resolve DENSE
-      regions with tiny candidate sets while sparse queries fall
-      through at the cost of a near-empty ring join. Without them a
-      single global cell size must fit the densest cluster AND the
-      sparse background: the geocoder's urban-hotspot cell held 20%
-      of all points, and its single-resolution 3x3 ring emitted
-      ~1.3e8 candidate pairs at sf1.0 (~10^4 candidates per hot
-      query for k=5).
-    * per radius r in ``radii`` (default just the 3x3 ring): (2r+1)^2
-      ring join at the base cell size over the still-unresolved
-      queries.
-    * final stage: ring of radius ceil(extent/cell_size)+1 — computed
-      from the data's own bounding box (one 1-row agg job), so the
-      ring provably covers every point and the guarantee is
-      unconditional. Still the same exploded-cell HASH join:
-      exhaustive coverage without a BroadcastNestedLoopJoin
-      (plan-asserted). Its explode is (2r_max+1)^2 cells PER
-      UNRESOLVED QUERY — linear in the remainder even when the whole
-      corpus is sparse, vs the old brute fallback's O(U x N) pairs.
 
-    Every stage is linear in (#queries x ring cells) + candidate
-    pairs; skewed hotspot cells stay AQE-splittable equi-join keys.
-    Each extra stage adds two window passes + an anti-join to the
-    plan (~0.5 s fixed cost at bench scale); the heavy per-stage
-    exchange subtrees are shared between the output union and the
-    next stage's remainder anti-join via Spark's exchange reuse.
-    """
-    points = ensure_parallelism(points)
-    # at most one call's per-stage frames (<= k rows per resolved
-    # query each) stay cached: the previous call's are released here
-    release_cached(points.sparkSession, "knn_self")
-    g = points.select(
-        F.col(id_col).alias("qid"), F.col("lon").alias("qx"),
-        F.col("lat").alias("qy"))
-    p_base = points.select(
-        F.col(id_col).alias("nid"), F.col("lon").alias("nx"),
-        F.col("lat").alias("ny"))
+class _Tiles(NamedTuple):
+    """k-d tiles over the data extent.
 
-    # final-ring radius from the data's own extent (one tiny agg job):
-    # a ring that wide centered anywhere covers the whole bounding box
-    ext = points.agg(
-        (F.max("lon") - F.min("lon")).alias("dx"),
-        (F.max("lat") - F.min("lat")).alias("dy"),
-        F.min(F.floor(F.col("lon") / cell_size)).alias("gxlo"),
-        F.max(F.floor(F.col("lon") / cell_size)).alias("gxhi"),
-        F.min(F.floor(F.col("lat") / cell_size)).alias("gylo"),
-        F.max(F.floor(F.col("lat") / cell_size)).alias("gyhi")).first()
-    span = max(float(ext.dx or 0.0), float(ext.dy or 0.0))
-    r_max = int(math.ceil(span / cell_size)) + 1
-    bbox = (int(ext.gxlo or 0), int(ext.gxhi or 0),
-            int(ext.gylo or 0), int(ext.gyhi or 0))
+    Node arrays (preorder, so children follow their parent): ``axis``
+    (0 = x, 1 = y, -1 at a leaf), ``split`` (coordinate < split goes
+    ``left``, the rest ``right``), ``leaf`` (tile id, -1 inside) and
+    ``box``, the union of the expanded rectangles below the node.
+    Tile arrays: ``ext``, the tile rectangle grown by its halo
+    (x0, x1, y0, y1), and ``far``, which of those sides lie at or
+    beyond the data extent, where no point can be outside them."""
+    axis: np.ndarray
+    split: np.ndarray
+    left: np.ndarray
+    right: np.ndarray
+    leaf: np.ndarray
+    box: np.ndarray
+    ext: np.ndarray
+    far: np.ndarray
 
-    # distinct occupied cells: at 11.25-degree cells the worldwide
-    # dimension is <= 32x16 rows; even at street-level cells it is
-    # bounded by data density, not ring width — safe to broadcast
-    # (base cell size only — used by the exhaustive stage's semi-join)
-    occupied = p_base.select(
-        F.floor(F.col("nx") / cell_size).alias("gx"),
-        F.floor(F.col("ny") / cell_size).alias("gy")).distinct()
 
-    w = Window.partitionBy("qid").orderBy(F.col("dist2"), F.col("nid"))
-    w2 = Window.partitionBy("qid")
+def _sample_partition(batches):
+    """One row per non-empty partition: its row count, its extent and
+    the KNN_SAMPLE_CAP rows with the smallest id hash (pandas' fixed
+    hash key seeds it, so the sample does not depend on row order)."""
+    n, ext, kept = 0, [], None
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        n += len(pdf)
+        ext.append((pdf.x.min(), pdf.x.max(), pdf.y.min(), pdf.y.max()))
+        pdf = pdf.assign(
+            h=pd.util.hash_pandas_object(pdf.id, index=False).to_numpy())
+        kept = pdf if kept is None else pd.concat([kept, pdf])
+        kept = kept.nsmallest(KNN_SAMPLE_CAP, "h")
+    if n:
+        e = np.array(ext)
+        yield pd.DataFrame({
+            "n": [n], "x0": [e[:, 0].min()], "x1": [e[:, 1].max()],
+            "y0": [e[:, 2].min()], "y1": [e[:, 3].max()],
+            "xs": [kept.x.to_numpy()], "ys": [kept.y.to_numpy()]})
 
-    def ring_topk(queries: DataFrame, cs: float, radius: int,
-                  exhaustive: bool) -> DataFrame:
-        # Equi-join formulation of the (2r+1)^2 ring at cell size cs:
-        # explode each query into its ring cells and hash-join on the
-        # cell key. A pure range predicate (ngx BETWEEN qgx±r ...) has
-        # no equi-key and Catalyst falls back to a nested-loop join —
-        # quadratic at scale; the explode costs (2r+1)^2 x query rows
-        # but keeps the join linear and AQE-skew-splittable
-        # (urban-hotspot cells).
-        queries = queries.withColumn("qgx", F.floor(F.col("qx") / cs)) \
-            .withColumn("qgy", F.floor(F.col("qy") / cs))
-        p = p_base.select(
-            "nid", "nx", "ny",
-            F.floor(F.col("nx") / cs).alias("ngx"),
-            F.floor(F.col("ny") / cs).alias("ngy"))
-        n = 2 * radius + 1
-        if radius > 2:
-            # Wide rings (the exhaustive stage especially: (2*r_max+1)^2
-            # cells per query at world extent — thousands of rows each,
-            # nearly all landing on EMPTY cells) get two prunes:
-            # 1. GENERATION is clipped to the data's occupied-cell bbox
-            #    (greatest/least against the global gx/gy bounds from
-            #    the same 1-row agg as r_max), so out-of-extent cells
-            #    are never exploded at all — at sf0.1's world extent
-            #    this alone cuts the explode 4489 -> <=512 rows/query;
-            # 2. the clipped cells are semi-joined against the distinct
-            #    occupied-cell dimension BEFORE the point join — a
-            #    broadcast LeftSemi hash join (plan stays BNLJ-free)
-            #    that removes interior empties, worth another
-            #    occupancy-factor cut on any non-uniform corpus.
-            gxlo, gxhi, gylo, gyhi = bbox
-            ring_cells = F.expr(
-                f"explode(flatten(transform("
-                f"sequence(greatest(qgx - {radius}, {gxlo}L), "
-                f"least(qgx + {radius}, {gxhi}L)), gx -> "
-                f"transform(sequence(greatest(qgy - {radius}, {gylo}L), "
-                f"least(qgy + {radius}, {gyhi}L)), "
-                f"gy -> struct(gx, gy)))))")
+
+def _median_cut(x, y, w, rect):
+    """(axis, value) at the sample's weighted median along the
+    rectangle's longer side, or along the other side when the longer
+    one holds a single sampled value; None when all sampled points
+    coincide. Both sides of the cut keep at least one sampled point."""
+    wide = rect[1] - rect[0] >= rect[3] - rect[2]
+    for a in ((0, 1) if wide else (1, 0)):
+        o = np.argsort((x, y)[a], kind="stable")
+        c = (x, y)[a][o]
+        if c[0] == c[-1]:
+            continue
+        cum = np.cumsum(w[o])
+        v = c[np.searchsorted(cum, cum[-1] / 2)]
+        if v == c[0]:
+            v = c[np.searchsorted(c, v, side="right")]
+        return a, v
+    return None
+
+
+def _kd_tiles(x, y, w, extent):
+    """Split ``extent`` at weighted medians of the sample (x, y, weight
+    w) until each leaf's estimated point count is at most KNN_TILE_CAP.
+    Returns the node arrays (axis, split, left, right, leaf), the leaf
+    rectangles (T, 4) and the leaves' estimated counts (T,)."""
+    nodes: list[list] = []
+    rects, counts = [], []
+
+    def build(idx, rect, depth):
+        node = len(nodes)
+        nodes.append([-1, 0.0, -1, -1, -1])
+        count = w[idx].sum()
+        cut = _median_cut(x[idx], y[idx], w[idx], rect) \
+            if count > KNN_TILE_CAP and depth < _MAX_DEPTH else None
+        if cut is None:
+            nodes[node][4] = len(rects)
+            rects.append(rect)
+            counts.append(count)
+            return node
+        a, v = cut
+        c = (x, y)[a][idx]
+        lo, hi = list(rect), list(rect)
+        lo[2 * a + 1] = hi[2 * a] = v
+        nodes[node][:2] = a, v
+        nodes[node][2] = build(idx[c < v], lo, depth + 1)
+        nodes[node][3] = build(idx[c >= v], hi, depth + 1)
+        return node
+
+    build(np.arange(len(x)), list(extent), 0)
+    axis, split, left, right, leaf = map(np.array, zip(*nodes))
+    return ((axis, split.astype(np.float64), left, right, leaf),
+            np.array(rects, dtype=np.float64), np.array(counts))
+
+
+def _halos(rects, counts, k):
+    """Each tile's halo from its sampled density: three times the
+    radius expected to hold k + 1 points (the 1-D estimate where the
+    tile is a line)."""
+    dx = rects[:, 1] - rects[:, 0]
+    dy = rects[:, 3] - rects[:, 2]
+    r2 = np.sqrt((k + 1) * dx * dy / (np.pi * counts))
+    r1 = (k + 1) * np.maximum(dx, dy) / (2 * counts)
+    return 3.0 * np.maximum(r2, r1)
+
+
+def _tree(nodes, rects, halo, extent) -> _Tiles:
+    """The k-d nodes with each tile grown by its (T, 4) side halos."""
+    axis, split, left, right, leaf = nodes
+    ext = rects + halo * np.array([-1.0, 1.0, -1.0, 1.0])
+    x0, x1, y0, y1 = extent
+    far = np.stack([ext[:, 0] <= x0, ext[:, 1] >= x1,
+                    ext[:, 2] <= y0, ext[:, 3] >= y1], axis=1)
+    box = np.empty((len(axis), 4))
+    for i in reversed(range(len(axis))):
+        if leaf[i] >= 0:
+            box[i] = ext[leaf[i]]
         else:
-            ring_cells = F.expr(
-                f"explode(transform(sequence(0, {n * n - 1}), i -> "
-                f"struct(qgx + i % {n} - {radius} AS gx, "
-                f"qgy + i DIV {n} - {radius} AS gy)))")
-        gq = queries.select("*", ring_cells.alias("cell")).select(
-            "qid", "qx", "qy", "qgx", "qgy",
-            F.col("cell.gx").alias("gx"), F.col("cell.gy").alias("gy"))
-        if radius > 2:
-            gq = gq.join(F.broadcast(occupied), ["gx", "gy"], "left_semi")
-        ring = gq.join(
-            p,
-            (F.col("ngx") == F.col("gx")) & (F.col("ngy") == F.col("gy"))
-            & (F.col("nid") != F.col("qid")),
-            "inner",
-        ).withColumn(
-            "dist2",
-            (F.col("nx") - F.col("qx")) * (F.col("nx") - F.col("qx"))
-            + (F.col("ny") - F.col("qy")) * (F.col("ny") - F.col("qy")))
-        topk = ring.withColumn("rank", F.row_number().over(w)) \
-            .where(F.col("rank") <= k)
-        if exhaustive:
-            return topk
-        # guarantee: any point outside the ring is >= radius*cs away
-        # (per-stage cell size). count/kth via a second window over
-        # the same partitioning — reuses the row_number exchange, no
-        # extra groupBy+join round trip. STRICT kth < lim: at exactly
-        # radius*cs an outside point ties the kth distance and could
-        # win the (dist2, nid) tie-break, so boundary ties must
-        # escalate to the next stage
-        lim = (radius * cs) ** 2
-        return (topk.withColumn("ncand", F.count("*").over(w2))
-                .withColumn("kth", F.max("dist2").over(w2))
-                .where((F.col("ncand") == k) & (F.col("kth") < F.lit(lim)))
-                .drop("ncand", "kth"))
+            lo, hi = box[left[i]], box[right[i]]
+            box[i] = (min(lo[0], hi[0]), max(lo[1], hi[1]),
+                      min(lo[2], hi[2]), max(lo[3], hi[3]))
+    return _Tiles(axis, split, left, right, leaf, box, ext, far)
 
+
+def _home(t: _Tiles, x, y):
+    """Tile holding each point: one k-d descent, O(log T) per point."""
+    node = np.zeros(len(x), dtype=np.int64)
+    inner = np.flatnonzero(t.axis[node] >= 0)
+    while len(inner):
+        nd = node[inner]
+        c = np.where(t.axis[nd] == 0, x[inner], y[inner])
+        node[inner] = np.where(c < t.split[nd], t.left[nd], t.right[nd])
+        inner = inner[t.axis[node[inner]] >= 0]
+    return t.leaf[node]
+
+
+def _covering(t: _Tiles, x, y):
+    """(point index, tile) for every tile whose closed expanded
+    rectangle holds the point: a descent into each child whose box
+    holds it, O(log T + replicas) per point."""
+    pi = np.arange(len(x))
+    nd = np.zeros(len(x), dtype=np.int64)
+    found_p, found_t = [pi[:0]], [nd[:0]]
+    while len(pi):
+        b = t.box[nd]
+        px, py = x[pi], y[pi]
+        inside = (b[:, 0] <= px) & (px <= b[:, 1]) \
+            & (b[:, 2] <= py) & (py <= b[:, 3])
+        pi, nd = pi[inside], nd[inside]
+        at_leaf = t.leaf[nd] >= 0
+        found_p.append(pi[at_leaf])
+        found_t.append(t.leaf[nd[at_leaf]])
+        pi, nd = pi[~at_leaf], nd[~at_leaf]
+        pi = np.concatenate([pi, pi])
+        nd = np.concatenate([t.left[nd], t.right[nd]])
+    return np.concatenate(found_p), np.concatenate(found_t)
+
+
+def _replicas(t: _Tiles, x, y):
+    """Each point's home tile, and (point index, tile) for every other
+    tile whose expanded rectangle holds it."""
+    home = _home(t, x, y)
+    p, tile = _covering(t, x, y)
+    other = tile != home[p]
+    return home, p[other], tile[other]
+
+
+def _tiles(x, y, w, extent, k) -> _Tiles:
+    """Tiles and halos from the weighted sample. Each side of a tile
+    carries its own halo, first the tile's density estimate. A side
+    whose sampled replicas would exceed KNN_TILE_CAP shrinks to the
+    widest halo that fits, so no tile group grows with the data: a
+    sparse tile beside a dense cluster narrows only the side facing
+    the cluster, and the few queries near that side go to the
+    fallback rather than pulling the cluster in."""
+    nodes, rects, counts = _kd_tiles(x, y, w, extent)
+    halo = np.repeat(_halos(rects, counts, k)[:, None], 4, axis=1)
+    _, p, tile = _replicas(_tree(nodes, rects, halo, extent), x, y)
+    r = rects[tile]
+    # how far a replica lies beyond each side; its largest overshoot
+    # is the smallest halo of that side that still replicates it
+    over = np.stack([r[:, 0] - x[p], x[p] - r[:, 1],
+                     r[:, 2] - y[p], y[p] - r[:, 3]], axis=1)
+    key = tile * 4 + over.argmax(axis=1)
+    d = over.max(axis=1)
+    o = np.lexsort((d, key))
+    key, d, wt = key[o], d[o], w[p][o]
+    cum = np.cumsum(wt)
+    first = np.searchsorted(key, key)
+    full = cum - cum[first] + wt[first] > KNN_TILE_CAP
+    key, j = np.unique(key[full], return_index=True)
+    tt, side = np.divmod(key, 4)
+    halo[tt, side] = np.minimum(
+        halo[tt, side], np.maximum(np.nextafter(d[full][j], -np.inf), 0.0))
+    return _tree(nodes, rects, halo, extent)
+
+
+def _replicate(t: _Tiles, batches):
+    """Every point once at its home tile and once per replica tile."""
+    for pdf in batches:
+        x = pdf.x.to_numpy(np.float64)
+        y = pdf.y.to_numpy(np.float64)
+        home, p, tile = _replicas(t, x, y)
+        p = np.concatenate([np.arange(len(x)), p])
+        yield pd.DataFrame({
+            "tile": np.concatenate([home, tile]).astype(np.int32),
+            "home": np.arange(len(p)) < len(x),
+            "id": pdf.id.to_numpy()[p], "x": x[p], "y": y[p]})
+
+
+def _topk(qid, qx, qy, cid, cx, cy, k):
+    """Each query's k nearest candidates other than itself, ranked by
+    (dist2, id): the candidates come sorted by id and the rank sort is
+    stable. Returns (query index, candidate index, rank, dist2)."""
+    out = [(np.zeros(0, np.int64),) * 3 + (np.zeros(0),)]
+    step = max(1, _BLOCK // len(cid))
+    kk = min(k, len(cid))
+    for s in range(0, len(qid), step):
+        dx = cx[None, :] - qx[s:s + step, None]
+        dy = cy[None, :] - qy[s:s + step, None]
+        d2 = dx * dx + dy * dy
+        d2[cid[None, :] == qid[s:s + step, None]] = np.inf
+        kth = np.partition(d2, kk - 1, axis=1)[:, kk - 1]
+        r, c = np.nonzero(d2 <= kth[:, None])
+        v = d2[r, c]
+        o = np.lexsort((c, v, r))
+        r, c, v = r[o], c[o], v[o]
+        rank = np.arange(len(r)) - np.searchsorted(r, r) + 1
+        keep = (rank <= k) & np.isfinite(v)
+        out.append((r[keep] + s, c[keep], rank[keep], v[keep]))
+    return tuple(np.concatenate(a) for a in zip(*out))
+
+
+def _tile_knn(t: _Tiles, k: int, pdf: pd.DataFrame) -> pd.DataFrame:
+    """Exact kNN of one tile's home points over its home and replica
+    points. A query is resolved when it has k neighbours and its kth
+    dist2 is below the squared distance to the nearest side of the
+    expanded rectangle: every point left out lies strictly beyond that
+    side, so none can tie or beat the kth. Unresolved queries come out
+    as one rank-0 row carrying their coordinates and, as dist2, their
+    local kth dist2 (inf below k neighbours): k real points lie that
+    close, so it bounds the true kth from above."""
+    tile = int(pdf.tile.iat[0])
+    pdf = pdf.sort_values("id", kind="stable")
+    cid = pdf.id.to_numpy()
+    cx = pdf.x.to_numpy(np.float64)
+    cy = pdf.y.to_numpy(np.float64)
+    home = pdf.home.to_numpy()
+    qid, qx, qy = cid[home], cx[home], cy[home]
+    e = t.ext[tile]
+    side = np.stack([qx - e[0], e[1] - qx, qy - e[2], e[3] - qy], axis=1)
+    side[:, t.far[tile]] = np.inf
+    reach = side.min(axis=1)
+    qi, ci, rank, d2 = _topk(qid, qx, qy, cid, cx, cy, k)
+    kth = np.full(len(qid), np.inf)
+    kth[qi[rank == k]] = d2[rank == k]
+    ok = kth < reach * reach * (1.0 - _MARGIN)
+    keep, miss = ok[qi], ~ok
+    zero, pad = np.zeros(int(miss.sum())), np.zeros(int(keep.sum()))
+    return pd.DataFrame({
+        "qid": np.concatenate([qid[qi[keep]], qid[miss]]),
+        "nid": np.concatenate([cid[ci[keep]], qid[miss]]),
+        "rank": np.concatenate([rank[keep], zero]).astype(np.int32),
+        "dist2": np.concatenate([d2[keep], kth[miss]]),
+        "qx": np.concatenate([pad, qx[miss]]),
+        "qy": np.concatenate([pad, qy[miss]])})
+
+
+def _ring_fallback(queries: DataFrame, pts: DataFrame, k: int,
+                   cs: float, extent) -> DataFrame:
+    """Exact top-k of ``queries`` (qid, qx, qy, bound) over all points.
+
+    Every true neighbour of a query lies within dist2 ``bound``, so
+    within ceil(sqrt(bound) / cs) + 1 cells of it (the +1 absorbs the
+    floor of the cell index); a ring that wide, capped at the
+    exhaustive radius ceil(span / cs) + 1 that covers the whole extent
+    (an infinite bound), holds them all. Each query's ring is
+    exploded clipped to the occupied-cell bounding box, semi-joined
+    against the occupied cells (a broadcast LeftSemi) and hash-joined
+    to the points on the cell key — never a nested loop."""
+    x0, x1, y0, y1 = extent
+    gx0, gx1, gy0, gy1 = (math.floor(v / cs) for v in extent)
+    r_max = math.ceil(max(x1 - x0, y1 - y0) / cs) + 1
+    lim = F.lit(float(r_max * cs) ** 2)
+    p = pts.select(F.col("id").alias("nid"), F.col("x").alias("nx"),
+                   F.col("y").alias("ny"),
+                   F.floor(F.col("x") / cs).alias("ngx"),
+                   F.floor(F.col("y") / cs).alias("ngy"))
+    occupied = p.select(F.col("ngx").alias("gx"),
+                        F.col("ngy").alias("gy")).distinct()
+    q = queries.select(
+        "qid", "qx", "qy",
+        F.floor(F.col("qx") / cs).alias("qgx"),
+        F.floor(F.col("qy") / cs).alias("qgy"),
+        F.least(F.lit(r_max), F.ceil(
+            F.sqrt(F.least(F.col("bound"), lim)) / cs) + 1).alias("r"))
+    cells = F.expr(
+        f"explode(flatten(transform("
+        f"sequence(greatest(qgx - r, {gx0}L), least(qgx + r, {gx1}L)), "
+        f"gx -> transform("
+        f"sequence(greatest(qgy - r, {gy0}L), least(qgy + r, {gy1}L)), "
+        f"gy -> struct(gx, gy)))))")
+    gq = (q.select("qid", "qx", "qy", cells.alias("cell"))
+          .select("qid", "qx", "qy", "cell.gx", "cell.gy")
+          .join(F.broadcast(occupied), ["gx", "gy"], "left_semi"))
+    ring = gq.join(
+        p,
+        (F.col("ngx") == F.col("gx")) & (F.col("ngy") == F.col("gy"))
+        & (F.col("nid") != F.col("qid")),
+        "inner",
+    ).withColumn(
+        "dist2",
+        (F.col("nx") - F.col("qx")) * (F.col("nx") - F.col("qx"))
+        + (F.col("ny") - F.col("qy")) * (F.col("ny") - F.col("qy")))
+    w = Window.partitionBy("qid").orderBy(F.col("dist2"), F.col("nid"))
+    return ring.withColumn("rank", F.row_number().over(w)) \
+        .where(F.col("rank") <= k)
+
+
+def knn_self(points: DataFrame, k: int = 5, cell_size: float = 11.25,
+             id_col: str = "doc_id") -> DataFrame:
+    """Exact self-kNN (id, neighbor_id, rank, dist2), rank 1..k by
+    (dist2, neighbor_id), dist2 = (nx-qx)*(nx-qx)+(ny-qy)*(ny-qy).
+
+    1. **Sample.** One job returns each partition's row count, extent
+       and a deterministic sample of at most KNN_SAMPLE_CAP rows.
+    2. **Tiles** (driver). k-d splits at the weighted sample median
+       along the longer side until each tile holds an estimated
+       KNN_TILE_CAP points or fewer, so the tile count grows with N and
+       dense clusters (the geocoder's urban hotspot) become many small
+       tiles. Each tile gets a halo from its sampled density; a side
+       whose sampled replicas would exceed KNN_TILE_CAP narrows.
+    3. **One tile pass.** Each point goes to its home tile and to every
+       tile whose halo-grown rectangle holds it (a k-d descent, not a
+       scan of all tiles); one ``groupBy(tile).applyInPandas`` runs an
+       exact NumPy kNN per tile. This frame is the one cached
+       (``cache_frame(..., "knn_self")``).
+    4. **Fallback, only when needed.** Queries the tile could not
+       resolve (fewer than k neighbours, or a kth dist2 not strictly
+       below the squared distance to the nearest expanded side that
+       lies inside the data extent, with a float margin) go to a
+       cell-ring hash join, the ring as wide as the query's local kth
+       distance (the whole extent below k local neighbours).
+
+    Tiles and halos only decide which path answers a query, never the
+    answer: both paths compute dist2 in the same operation order and
+    rank by (dist2, neighbor_id). Coincident points cannot be split
+    apart, so a tile of one repeated coordinate may exceed the cap.
+    ``cell_size`` is the fallback's cell.
+    """
+    spark = points.sparkSession
+    # the previous call's tile frame is released here
+    release_cached(spark, "knn_self")
+    pts = points.select(F.col(id_col).alias("id"), F.col("lon").alias("x"),
+                        F.col("lat").alias("y"))
+    id_t = pts.schema["id"].dataType.simpleString()
+    parts = pts.mapInPandas(_sample_partition, _SAMPLE_SCHEMA).collect()
+    if not parts:
+        return spark.createDataFrame(
+            [], f"{id_col} {id_t}, neighbor_id {id_t}, rank int, "
+                "dist2 double")
+    extent = (min(r.x0 for r in parts), max(r.x1 for r in parts),
+              min(r.y0 for r in parts), max(r.y1 for r in parts))
+    x = np.concatenate([np.asarray(r.xs, np.float64) for r in parts])
+    y = np.concatenate([np.asarray(r.ys, np.float64) for r in parts])
+    w = np.concatenate([np.full(len(r.xs), r.n / len(r.xs)) for r in parts])
+    tiles = _tiles(x, y, w, extent, k)
+
+    found = (pts.mapInPandas(lambda it: _replicate(tiles, it),
+                             f"tile int, home boolean, id {id_t}, "
+                             "x double, y double")
+             .groupBy("tile")
+             .applyInPandas(lambda pdf: _tile_knn(tiles, k, pdf),
+                            f"qid {id_t}, nid {id_t}, rank int, "
+                            "dist2 double, qx double, qy double"))
+    found = cache_frame(found, "knn_self")
     cols = [F.col("qid").alias(id_col), F.col("nid").alias("neighbor_id"),
-            F.col("rank"), F.col("dist2")]
-    out = None
-    remaining = g
-    # finest cells first (dense clusters resolve with tiny rings),
-    # then the base-size radii ladder, then the extent-covering
-    # exhaustive ring; each stage sees only the queries every finer
-    # stage failed to resolve
-    stages = [(cell_size / f, 1) for f in fine_fractions if f > 1] \
-        + [(cell_size, r) for r in radii if r < r_max] \
-        + [(cell_size, r_max)]
-    for i, (cs, radius) in enumerate(stages):
-        last = i == len(stages) - 1
-        stage = ring_topk(remaining, cs, radius, exhaustive=last)
-        if not last:
-            # persist + eager barrier: a non-final stage's output is
-            # read by BOTH the result union and the next stage's
-            # remainder anti-join, and later stages chain on it — left
-            # lazy, every downstream consumer re-executes the whole
-            # ring-join subtree (exchange reuse does not cover the
-            # windows/filters above the shuffle, and the chained plans
-            # grow multiplicatively with the stage count). The cached
-            # frame is bounded: <= k rows per RESOLVED query.
-            stage = cache_frame(stage, "knn_self")
-        out = stage.select(*cols) if out is None \
-            else out.unionByName(stage.select(*cols))
-        if not last:
-            remaining = remaining.join(
-                stage.select("qid").distinct(), "qid", "left_anti")
-    return out
-
+            "rank", "dist2"]
+    out = found.where(F.col("rank") > 0).select(*cols)
+    missed = found.where(F.col("rank") == 0).select(
+        "qid", "qx", "qy", F.col("dist2").alias("bound"))
+    if missed.isEmpty():
+        return out
+    return out.unionByName(
+        _ring_fallback(missed, pts, k, cell_size, extent).select(*cols))
 
 def knn_oracle_sql(points_sql: str, k: int = 5, id_col: str = "doc_id") -> str:
     return f"""

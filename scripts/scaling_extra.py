@@ -75,10 +75,9 @@ def worker() -> None:
     docs.count()
     pts = geocode(docs).select("doc_id", "lat", "lon")
     # knn_200k: 4x-replicated point cloud, unique ids, hotspot
-    # preserved (exact coordinate copies — the ring join's candidate
-    # density is what's being scaled). At 50k the query's wall is
-    # part fixed stage-ladder latency; this row measures the
-    # compute-bound regime with the density-matched ladder.
+    # preserved (exact coordinate copies — the per-tile candidate
+    # density is what's being scaled); this row measures the
+    # compute-bound regime.
     pts4 = (pts.select(
         "doc_id", "lat", "lon",
         F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("r"))
@@ -90,8 +89,7 @@ def worker() -> None:
     queries = {
         "ngram_50k": lambda: dedup.ngram_jaccard_top1(docs).count(),
         "knn_50k": lambda: knn_self(pts, k=5).count(),
-        "knn_200k": lambda: knn_self(
-            pts4, k=5, fine_fractions=(1440.0, 360.0, 4.0)).count(),
+        "knn_200k": lambda: knn_self(pts4, k=5).count(),
     }
     times: dict[str, float] = {}
     trials: dict[str, list[float]] = {}

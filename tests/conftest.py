@@ -16,6 +16,7 @@ def spark():
 
 SF001 = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
+SF0P1 = os.path.join(os.path.dirname(SF01), "sf0.1")   # 5,000 documents
 
 
 @pytest.fixture(scope="session")
@@ -26,3 +27,8 @@ def sf001():
 @pytest.fixture(scope="session")
 def sf01():
     return SF01
+
+
+@pytest.fixture(scope="session")
+def sf0p1():
+    return SF0P1
